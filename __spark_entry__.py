@@ -228,7 +228,9 @@ def q_datalog_aggregate(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_cc_users(spark: SparkSession, sf: str) -> DataFrame:
-    """Hash-min connected components over a deterministic user graph."""
+    """Connected components (min node id per component) over a deterministic
+    user graph: driver-local union-find below the small-graph gate, star CC
+    above it."""
     from nemo_spark.kg.canonicalize import connected_components
 
     u = _t(spark, sf, "events").select(F.col("user_id").cast("long").alias("a")).dropDuplicates()

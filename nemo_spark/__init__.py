@@ -16,7 +16,7 @@ DataFrames:
 - ``nemo_spark.sources``  — DSV / N-Triples / JSON / inline fact sources
   (mirrors ``nemo/src/io/formats``).
 - ``nemo_spark.kg``       — the KG-construction pipeline: transcript triple
-  extraction, entity linking, hash-min canonicalization, fixpoint materialize,
+  extraction, entity linking, min-label canonicalization, fixpoint materialize,
   checkpoint + lineage.
 - ``nemo_spark.ops``      — large-scale data-pipeline operators (dedup families,
   similarity search, text analysis, multimodal plumbing).

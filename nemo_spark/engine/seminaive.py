@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from nemo_spark.engine.stratify import stratify
 from nemo_spark.model.rules import Aggregate, Atom, EVar, Program, Rule, Var
+from nemo_spark.session import local_rows, single_slice_frame
 
 log = logging.getLogger("nemo_spark.engine")
 
@@ -843,24 +844,20 @@ class SemiNaiveEngine:
         total = sum(self._table_counts.get(p, 0) for p in preds)
         if total > self.local_stratum_threshold:
             return False
-        from pyspark.sql import Row
-
         t0 = time.time()
         tables: dict[str, set] = {}
         typed_flags: list[bool] = []
         for p in preds:
             if p not in self._tables:
                 continue
-            rows = set()
-            for r in self._tables[p].collect():
-                if any(c is None for c in r):
-                    # SQL-NULL cells have no local equivalent with Spark
-                    # semantics (None == None would JOIN where SQL NULL never
-                    # does, and a None head cell would survive where
-                    # _project_head drops it) — such strata stay distributed
-                    return False
-                rows.add(tuple(tuple(c) if isinstance(c, Row) else c for c in r))
-            tables[p] = rows
+            rows = local_rows(self._tables[p].collect())
+            # SQL-NULL cells have no local equivalent with Spark semantics
+            # (None == None would JOIN where SQL NULL never does, and a None
+            # head cell would survive where _project_head drops it) — such
+            # strata stay distributed, as do NaN and unhashable cells
+            if rows is None or any(c is None for r in rows for c in r):
+                return False
+            tables[p] = set(rows)
             typed_flags.append(_is_value_struct_df(self._tables[p]))
         # a MIXED stratum (typed value-struct tables alongside raw ones)
         # can't pick one schema/skolem/aggregate convention for its derived
@@ -892,12 +889,8 @@ class SemiNaiveEngine:
 
                     schema = ", ".join(f"c{i} {VALUE_SCHEMA}" for i in range(self._arity[pred]))
                 else:
-                    schema = None  # infer
-            df = (
-                self.spark.createDataFrame(list(rows), schema)
-                if schema is not None
-                else self.spark.createDataFrame(list(rows), _cols(self._arity[pred]))
-            )
+                    schema = _cols(self._arity[pred])  # types inferred from the rows
+            df = single_slice_frame(self.spark, list(rows), schema)
             fresh, cnt = self._merge(pred, df)
         # per-rule attribution (report()/timing() parity with the distributed
         # path): the local pass evaluates rule-by-rule in Python, so its
@@ -916,10 +909,8 @@ class SemiNaiveEngine:
             # path a stratum took (VERDICT r2 "What's wrong" #4)
             for pred, label, round_no, rows in lf.records:
                 schema = self._schemas.get(pred)
-                pf = (
-                    self.spark.createDataFrame(list(rows), schema)
-                    if schema is not None
-                    else self.spark.createDataFrame(list(rows), _cols(self._arity[pred]))
+                pf = single_slice_frame(
+                    self.spark, list(rows), _cols(self._arity[pred]) if schema is None else schema
                 )
                 self._provenance.append((pred, label, stratum_idx, round_no, pf))
         return True

@@ -1,21 +1,20 @@
-"""Hash-min connected components for entity canonicalization.
+"""Connected components for entity canonicalization.
 
-Iterative min-label propagation over an undirected edge list, as a DataFrame
-fixpoint job — the same delta-driven kernel as the rule engine (nemo analogy:
-a recursive Datalog program ``label(x, min(l))``), but specialized because the
-aggregate-in-recursion pattern is not stratifiable; hash-min is the standard
-distributed-CC construction.
+Each node's component is the minimum node id it reaches over an undirected
+edge list (nemo analogy: a recursive Datalog program ``label(x, min(l))``,
+specialized because aggregate-in-recursion is not stratifiable). Two paths,
+same output:
 
-Algorithm (label = lexicographic min node id reachable):
-  label0(x)   = min(x, min over neighbors y of y)
-  label_{t+1}(x) = min(label_t(x), min over neighbors y of label_t(y))
-until no label changes. Converges in O(diameter) rounds.
+- small graphs (below ``small_graph_threshold`` edges, the common case for
+  alias dictionaries): union-find on the driver over the size gate's
+  bounded collect, one Spark job in all;
+- everything else: alternating large-star / small-star rounds as DataFrame
+  jobs, O(log n) rounds regardless of graph diameter, each round eagerly
+  ``localCheckpoint``-ed (a CheckpointStore instead persists resumable
+  parquet snapshots every ``checkpoint_every`` rounds).
 
-Scale: each round is one shuffle (groupBy node); edges are repartitioned by
-src once and reused; ``localCheckpoint`` every ``checkpoint_every`` rounds
-truncates the growing plan (or a CheckpointStore persists resumable parquet
-snapshots). Skewed hub nodes are handled by AQE skew-join splitting; the
-groupBy min is a partial (map-side) aggregate so hot labels don't hotspot.
+Both return a materialized frame, so a consumer that broadcasts or reuses
+the result never recomputes it.
 """
 
 from __future__ import annotations
@@ -26,6 +25,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from nemo_spark.session import local_rows, single_slice_frame
 
 log = logging.getLogger("nemo_spark.cc")
 
@@ -38,7 +39,6 @@ def connected_components(
     checkpoint_store: Any | None = None,
     max_rounds: int = 60,
     small_graph_threshold: int = 100_000,
-    method: str = "auto",  # 'auto' | 'hashmin' (O(diameter) rounds) | 'star' (O(log n))
 ) -> DataFrame:
     """Return (node, component) where component = min node id in the CC.
 
@@ -47,22 +47,12 @@ def connected_components(
 
     ``small_graph_threshold`` > 0 enables a size-adaptive fast path: when the
     edge list is below the threshold (dimension-sized graphs, e.g. an alias
-    dictionary), collect the gate's bounded scan and union-find driver-side
-    — one Spark job instead of O(diameter) shuffle rounds, and the result
-    is a local relation that is free to broadcast. Output is identical
+    dictionary) and :func:`nemo_spark.session.local_rows` accepts its rows,
+    union-find runs driver-side off the gate's bounded scan — one Spark job
+    instead of O(log n) shuffle rounds. Everything else takes the
+    alternating-star algorithm (:func:`_star_cc`). Output is identical
     (min node id per component).
-
-    ``method='auto'`` (default) picks the alternating-star algorithm for
-    anything above the small-graph threshold: O(log n) rounds regardless of
-    diameter, so a 100-TB graph with a long-chain component never pays
-    O(diameter) shuffles. ``'hashmin'`` stays available (fewer per-round
-    jobs; fine when the diameter is known-small).
     """
-    if method not in ("auto", "star", "hashmin"):
-        # validate BEFORE any probe job or the small-graph fast path: a
-        # typo'd method must not succeed on test-sized inputs and only
-        # explode on production-sized ones
-        raise ValueError(f"unknown cc method: {method}")
     # NULL-endpoint normalization, identical for every path: an edge with
     # one NULL endpoint registers its non-null node as an isolated self-edge
     # (SQL join semantics — NULL connects nothing), a both-NULL edge drops.
@@ -89,18 +79,10 @@ def connected_components(
         # the gate IS the data: collect at most threshold+1 rows (bounded —
         # never a full materialization of a 100-TB edge relation) and, when
         # the graph fits, union-find driver-side in ONE Spark job total
-        # (output is linear in nodes, so no size fallback needed). The
-        # former shape spent three jobs — count probe, null probe, single-
-        # task mapInPandas — each re-deriving the edge frame. Same size-
-        # gated local pattern as the engine's <=100k local fixpoint; the
-        # single-slice driver-local result is cheap to broadcast downstream.
+        # (output is linear in nodes, so no size fallback needed)
         rows = edges.select(F.col(src), F.col(dst)).limit(small_graph_threshold + 1).collect()
-        if len(rows) <= small_graph_threshold and not any(
-            isinstance(v, float) and v != v for r in rows for v in (r[0], r[1])
-        ):
-            # (NaN node ids fall through to the distributed path: Python's
-            # nan != nan breaks dict-keyed union-find and diverges from
-            # SQL's NaN = NaN join equality)
+        rows = local_rows(rows) if len(rows) <= small_graph_threshold else None
+        if rows is not None:
             return _local_cc(edges.sparkSession, rows, edges.schema[src].dataType)
     if nullable and not edges.where(~both).limit(1).isEmpty():
         half = (
@@ -109,78 +91,7 @@ def connected_components(
             .select(F.col(src), F.col(src).alias(dst))
         )
         edges = edges.where(both).select(F.col(src), F.col(dst)).unionByName(half)
-    if method in ("auto", "star"):
-        return _star_cc(edges, src, dst, checkpoint_every, max_rounds, checkpoint_store)
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .dropDuplicates()
-        .repartition("a")
-        .persist()
-    )
-    # label(x) = min(x, min neighbor)
-    labels = (
-        sym.groupBy("a")
-        .agg(F.least(F.first("a"), F.min("b")).alias("label"))
-        .select(F.col("a").alias("node"), "label")
-        .persist()
-    )
-    rounds = 0
-    changed = 0
-    # persisted: the handle that OWNS each round's cache entry — unpersist
-    # must run on the persisted DataFrame itself, not a derived plan
-    # (Spark's cache lookup is by plan; old.unpersist() on a drop()
-    # derivative was a silent no-op and every round's labels leaked)
-    persisted = labels
-    while rounds < max_rounds:
-        rounds += 1
-        t0 = time.time()
-        # candidate labels via neighbors: min over label(b) for each a
-        nbr = (
-            sym.join(labels.withColumnRenamed("node", "b"), on="b")
-            .groupBy("a")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.join(nbr, labels["node"] == nbr["a"], "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias("label"),
-                (F.col("nbr_label") < F.col("label")).alias("__changed"),
-            )
-        ).persist()
-        # full count, not limit(1): the probe is also what materializes the
-        # persist — an early-exit count caches only the partitions it
-        # touched, and unpersisting the previous round then forces the
-        # uncached rest to recompute through the whole inter-checkpoint
-        # lineage window
-        changed = new_labels.filter(F.col("__changed")).count()
-        labels = new_labels.drop("__changed")
-        if checkpoint_store is not None and rounds % checkpoint_every == 0:
-            labels = checkpoint_store.snapshot("cc_labels", labels, rounds)
-        elif rounds % checkpoint_every == 0:
-            labels = labels.localCheckpoint(eager=True)
-        persisted.unpersist()
-        persisted = new_labels
-        log.debug("cc round %d changed=%s %.2fs", rounds, bool(changed), time.time() - t0)
-        if not changed:
-            break
-    if changed:
-        # LOUD cap (same contract as the engine's fixpoint round cap):
-        # returning labels that were still changing is silent corruption —
-        # nodes of one component would carry different labels
-        persisted.unpersist()
-        sym.unpersist()
-        raise ValueError(
-            f"connected_components(hashmin) did not converge in {max_rounds} rounds "
-            f"(graph diameter exceeds the cap); raise max_rounds or use method='star'"
-        )
-    result = labels.select(F.col("node"), F.col("label").alias("component")).localCheckpoint(
-        eager=True
-    )
-    persisted.unpersist()
-    sym.unpersist()
-    return result
+    return _star_cc(edges, src, dst, checkpoint_every, max_rounds, checkpoint_store)
 
 
 def _star_cc(
@@ -192,8 +103,8 @@ def _star_cc(
     checkpoint_store: Any | None = None,
 ) -> DataFrame:
     """Alternating large-star / small-star connected components — O(log n)
-    rounds regardless of graph diameter (vs hash-min's O(diameter)), the
-    right plan for high-diameter graphs (long chains) at cluster scale.
+    rounds regardless of graph diameter (min-label propagation needs
+    O(diameter)), the right plan for long chains at cluster scale.
 
     large-star: every node points its LARGER neighbors at its minimum
     neighborhood label; small-star: every node and its smaller neighbors
@@ -271,6 +182,7 @@ def _star_cc(
     return (
         nodes.join(labels, nodes["n"] == labels["node"], "left")
         .select(F.col("n").alias("node"), F.coalesce("component", "n").alias("component"))
+        .localCheckpoint(eager=True)
     )
 
 
@@ -304,8 +216,6 @@ def _local_cc(spark, rows, dt) -> DataFrame:
             parent[rb] = ra
     from pyspark.sql.types import StructField, StructType
 
-    from nemo_spark.session import single_slice_frame
-
     schema = StructType([StructField("node", dt), StructField("component", dt)])
     nodes = list(parent)
     return single_slice_frame(spark, [(n, find(n)) for n in nodes], schema)
@@ -316,14 +226,11 @@ def canonical_map_from_alias_dict(alias_dict: DataFrame, small_graph_threshold: 
     (node, canonical_id) for both alias and entity nodes. Node ids are
     namespaced ('a:' / 'e:') so aliases and entities cannot collide.
 
-    Alias dictionaries are dimension-sized, so the size-adaptive fast path
-    usually engages; huge dictionaries fall back to distributed hash-min."""
+    Alias dictionaries are dimension-sized, so the driver-local union-find
+    usually runs; huge dictionaries fall back to distributed star CC."""
     edges = alias_dict.select(
         F.concat(F.lit("a:"), F.col("alias")).alias("src"),
         F.concat(F.lit("e:"), F.col("entity_id")).alias("dst"),
     )
     cc = connected_components(edges, small_graph_threshold=small_graph_threshold)
-    out = cc.select(F.col("node"), F.col("component").alias("canonical_id"))
-    if getattr(cc, "_nemo_local", False):
-        out._nemo_local = True  # projection of a driver-local frame stays local
-    return out
+    return cc.select(F.col("node"), F.col("component").alias("canonical_id"))

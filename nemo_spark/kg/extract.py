@@ -2,7 +2,7 @@
 
 nemo analogy: this is our EDB "import" stage — raw text becomes ternary
 (subj, pred, obj) facts, like nemo's DSV/RDF readers turn files into
-predicates (``nemo/src/io/formats/``). Two implementations:
+predicates (``nemo/src/io/formats/``). Implementations:
 
 - :func:`extract_triples_expr` — pure Catalyst (regexp), whole-stage codegen,
   zero Python. FIRST sentence-anchored match per turn only (``TRIPLE_RE``
@@ -13,6 +13,13 @@ predicates (``nemo/src/io/formats/``). Two implementations:
   (the general path for arbitrary mention detectors; NO per-row Python —
   regex is applied per Arrow batch via pandas ``str.extractall``): EVERY
   occurrence in the turn, anywhere in the text.
+- :func:`extract_turn_features_arrow` — the pipeline's extractor: one
+  Arrow/RE2 pass per turn for the first triple plus quality, language-ID
+  and fingerprint features; :func:`extract_turn_features_pandas` is its
+  pandas twin, kept as the A/B reference.
+- :func:`extract_alias_triples_arrow` — triples only, distinct per batch,
+  for the pipeline's canonical-triples stage.
+- :func:`extract_mentions_pandas` — mention spans with character offsets.
 
 Scale notes: extraction is embarrassingly parallel per turn. We repartition by
 (conv_id, turn_idx) — NOT conv_id alone — so the planted hot conversation
@@ -92,36 +99,6 @@ def extract_triples_pandas(
     return cols.mapInPandas(extract, schema=TRIPLES_RAW_SCHEMA)
 
 
-ARROW_TRIPLE_RE = "^" + NAMED_MENTION_RE
-
-
-def extract_triples_arrow(transcripts: DataFrame) -> DataFrame:
-    """Arrow-native extractor: ``mapInArrow`` + ``pyarrow.compute.extract_regex``
-    (RE2 in C++). No Python objects are materialized per row — unlike the
-    pandas path, whose object-dtype strings saturate memory bandwidth before
-    CPUs are busy. Same output as :func:`extract_triples_pandas` for
-    sentence-initial relation sentences (the corpus contract)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    def extract(batches):
-        for batch in batches:
-            hits = pc.extract_regex(batch.column("text"), pattern=ARROW_TRIPLE_RE)
-            tbl = pa.table(
-                {
-                    "conv_id": batch.column("conv_id"),
-                    "turn_idx": batch.column("turn_idx"),
-                    "subj_alias": pc.struct_field(hits, "subj_alias"),
-                    "pred": pc.struct_field(hits, "pred"),
-                    "obj_alias": pc.struct_field(hits, "obj_alias"),
-                }
-            ).filter(hits.is_valid())
-            yield from tbl.to_batches()
-
-    cols = transcripts.select("conv_id", "turn_idx", "text")
-    return cols.mapInArrow(extract, schema=TRIPLES_RAW_SCHEMA)
-
-
 TURN_FEATURES_SCHEMA = (
     "conv_id string, turn_idx int, subj_alias string, pred string, obj_alias string, "
     "n_tokens int, n_mentions int, n_stopwords int, quality double, "
@@ -160,7 +137,8 @@ def extract_turn_features_pandas(transcripts: DataFrame) -> DataFrame:
     """One-pass per-turn extraction: relation triple + mention count + token /
     stopword counts + quality ratio + language-ID + content fingerprint.
 
-    This is the pipeline's production extractor: at 100 TB you only get to
+    The pandas twin of :func:`extract_turn_features_arrow` (the pipeline's
+    production extractor). At 100 TB you only get to
     stream the text once, so relation extraction, mention detection, quality
     scoring, language-ID and the dedup fingerprint share a single Arrow pass
     (per-batch vectorized pandas). The stage is compute-heavy per byte, so it
@@ -322,44 +300,6 @@ def extract_alias_triples_arrow(transcripts: DataFrame) -> DataFrame:
     return transcripts.select("text").mapInArrow(extract, schema=ALIAS_TRIPLES_SCHEMA)
 
 
-REDUCED_TRIPLES_SCHEMA = "subj_alias string, pred string, obj_alias string, n long"
-
-
-def extract_triples_reduced_pandas(transcripts: DataFrame, min_quality: float = 0.0) -> DataFrame:
-    """Triples path at scale: the same one-pass per-turn computation as
-    :func:`extract_turn_features_pandas` (quality gate included), but the
-    python side MAP-SIDE PRE-AGGREGATES: each Arrow batch returns its distinct
-    (subj_alias, pred, obj_alias) with a count instead of per-turn rows.
-
-    Set semantics make this exact (the engine dedups globally afterwards);
-    the return transfer drops from O(turns) to O(distinct triples per batch) —
-    the python→JVM path stops being a bandwidth wall. This is the UDF analogue
-    of Spark's partial aggregation."""
-    triple_pat = re.compile(MENTION_RE)
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            t = pdf["text"]
-            hits = t.str.extract(triple_pat)
-            hits.columns = ["subj_alias", "pred", "obj_alias"]
-            if min_quality > 0.0:
-                n_tokens = t.str.count(" ").add(1)
-                n_stop = t.str.count(_STOPWORD_RE)
-                quality = (n_stop / n_tokens).clip(0.0, 1.0)
-                hits = hits[quality >= min_quality]
-            hits = hits[hits["subj_alias"].notna()]
-            if hits.empty:
-                continue
-            yield hits.groupby(["subj_alias", "pred", "obj_alias"], as_index=False).size().rename(
-                columns={"size": "n"}
-            )
-
-    cols = transcripts.select("text")
-    return cols.mapInPandas(extract, schema=REDUCED_TRIPLES_SCHEMA)
-
-
 MENTIONS_SCHEMA = "conv_id string, turn_idx int, mention string, span_start int, span_end int"
 
 # MENTION_RE with an explicit lazy prefix group: ``re.search(MENTION_RE, s)``
@@ -423,18 +363,3 @@ def extract_mentions_pandas(transcripts: DataFrame) -> DataFrame:
 
     return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(extract, schema=MENTIONS_SCHEMA)
 
-
-EXTRACT_SQL_TEMPLATE = """
-SELECT conv_id, turn_idx,
-       regexp_extract(text, '{re}', 1) AS subj_alias,
-       regexp_extract(text, '{re}', 2) AS pred,
-       regexp_extract(text, '{re}', 3) AS obj_alias
-FROM ({transcripts})
-WHERE regexp_extract(text, '{re}', 1) <> ''
-"""
-
-
-def extract_sql(transcripts_sql: str) -> str:
-    """DuckDB oracle for :func:`extract_triples_expr` over a transcripts SQL."""
-    # DuckDB standard string literals keep backslashes verbatim: no escaping
-    return EXTRACT_SQL_TEMPLATE.format(re=TRIPLE_RE, transcripts=transcripts_sql)

@@ -133,7 +133,7 @@ def link_embedding(
     string-based :func:`link_scored` complements.
 
     ``top1=True`` (default): best entity per mention — max cosine, ties
-    broken by MIN entity_id (the hash-min canonicalization convention,
+    broken by MIN entity_id (the min-label canonicalization convention,
     matching :func:`best_candidate`); rows below ``min_score`` drop.
     ``top1=False``: every (mention, entity) pair with cosine >= min_score.
 
@@ -251,7 +251,7 @@ def _broadcast_cached(spark, ent_ids, eunit):
 
 def best_candidate(scored: DataFrame, key_cols: list[str], score_col: str = "score") -> DataFrame:
     """Keep the best-scoring candidate per key; ties broken by MIN entity_id
-    (matches the hash-min canonicalization convention).
+    (matches the min-label canonicalization convention).
 
     min(struct(-score, entity_id)) — a single partial-aggregating groupBy,
     no window sort."""

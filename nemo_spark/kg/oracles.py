@@ -3,7 +3,7 @@
 Each constant mirrors one Spark-side stage 1:1 (same column names, same
 values), composed from the shared CTE pieces in
 :mod:`nemo_spark.kg.transcripts`. Recursive CTEs stand in for our iterative
-fixpoint jobs (hash-min CC, transitive closure) — tractable because the
+fixpoint jobs (connected components, transitive closure) — tractable because the
 correctness corpus is small; at scale only the Spark side runs.
 """
 

@@ -4,16 +4,18 @@ triples -> fixpoint closure.
 Stages (each checkpointable to a :class:`CheckpointStore` snapshot with
 per-partition lineage + metrics, so runs resume mid-pipeline):
 
-1. extract   — vectorized Arrow-batched triple extraction per turn
+1. extract   — Arrow/RE2 (``mapInArrow``) per-turn feature extraction
 2. link      — broadcast alias-dictionary join (exact) per mention
-3. canonical — hash-min connected components over the alias/entity graph
+3. canonical — connected components over the alias/entity graph
+               (driver-local union-find when small, star CC otherwise)
 4. triples   — canonicalized, set-semantics (subj, pred, obj)
-5. closure   — semi-naive fixpoint: transitive predicates materialized
-               through the generic rule engine (nemo's evaluation core)
+5. closure   — transitive predicates closed by semi-naive path doubling
+               (driver-local BFS when small), see ``ops.graph``
 
 The closure stage IS nemo re-imagined: derived triples are produced by
 repeatedly joining a delta against the accumulating fact table until no new
-facts appear (``nemo/src/execution/execution_engine.rs:295-345``).
+facts appear (``nemo/src/execution/execution_engine.rs:295-345``), in
+O(log diameter) doubling rounds instead of the rule engine's O(diameter).
 """
 
 from __future__ import annotations
@@ -27,12 +29,7 @@ from pyspark.sql import functions as F
 from nemo_spark.engine.checkpoint import CheckpointStore
 from nemo_spark.kg import transcripts as T
 from nemo_spark.kg.canonicalize import canonical_map_from_alias_dict
-from nemo_spark.kg.extract import (
-    extract_triples_expr,
-    extract_triples_pandas,
-    extract_turn_features_arrow,
-    extract_turn_features_pandas,
-)
+from nemo_spark.kg.extract import extract_alias_triples_arrow, extract_turn_features_arrow
 
 
 @dataclass
@@ -49,7 +46,6 @@ def run_pipeline(
     transcripts: DataFrame,
     alias_dict: DataFrame | None = None,
     checkpoint_store: CheckpointStore | None = None,
-    extractor: str = "features",  # features | features_pandas | pandas | arrow | expr | reduced
     transitive_preds: tuple[str, ...] = ("located_in",),
 ) -> PipelineResult:
     metrics: dict = {}
@@ -57,8 +53,7 @@ def run_pipeline(
 
     # resume support: skip completed stages when a store is given.
     # materialize=True: without a store, eagerly localCheckpoint the stage
-    # output so downstream broadcasts/reuses never recompute its lineage
-    # (the CC loop would otherwise re-run once per broadcast).
+    # output so downstream broadcasts/reuses never recompute its lineage.
     def stage(name: str, build, step: int, materialize: bool = False) -> DataFrame:
         if checkpoint_store is not None:
             cached = checkpoint_store.load(name)
@@ -69,51 +64,24 @@ def run_pipeline(
         df = build()
         if checkpoint_store is not None:
             df = checkpoint_store.snapshot(name, df, step)
-        elif materialize and not getattr(df, "_nemo_local", False):
-            # _nemo_local frames (driver-computed small CC/TC results) are
-            # single-slice driver-held frames: already materialized, cheap to broadcast —
-            # a localCheckpoint would only re-ship them as one more job
+        elif materialize:
             df = df.localCheckpoint(eager=True)
         metrics[name] = {"wall_sec": time.time() - t0}
         return df
 
     alias_dict = alias_dict if alias_dict is not None else T.alias_dict(spark)
 
-    # 1. extract — default: the one-pass per-turn feature extractor
-    # (triples + mentions + quality + langid + dedup fingerprint), in its
-    # Arrow/RE2 form (~2x the pandas variant, identical output — A/B in
+    # 1. extract — the one-pass per-turn feature extractor (triples +
+    # mentions + quality + langid + dedup fingerprint) in its Arrow/RE2 form
+    # (~2x the pandas variant, identical output — A/B in
     # tests/test_ops.py::test_feature_extractors_identical)
-    def _reduced():
-        from nemo_spark.kg.extract import extract_triples_reduced_pandas
-
-        return extract_triples_reduced_pandas
-
-    def _arrow():
-        from nemo_spark.kg.extract import extract_triples_arrow
-
-        return extract_triples_arrow
-
-    extract_fns = {
-        "features": lambda: extract_turn_features_arrow,
-        "features_pandas": lambda: extract_turn_features_pandas,
-        "pandas": lambda: extract_triples_pandas,
-        "expr": lambda: extract_triples_expr,
-        "reduced": _reduced,
-        "arrow": _arrow,
-    }
-    if extractor not in extract_fns:
-        raise ValueError(
-            f"unknown extractor {extractor!r}: choose from {sorted(extract_fns)}"
-        )
-    extract_fn = extract_fns[extractor]()
-    triples_raw = stage("triples_raw", lambda: extract_fn(transcripts), 1)
+    triples_raw = stage("triples_raw", lambda: extract_turn_features_arrow(transcripts), 1)
 
     # 2+3. canonical map: CC over the (alias, entity) bipartite graph.
     # The alias dictionary is dimension-sized, so the canonical map is small
-    # and broadcastable; mentions never shuffle for linking.
-    canonical_map = stage(
-        "canonical_map", lambda: canonical_map_from_alias_dict(alias_dict), 1, materialize=True
-    )
+    # and broadcastable; mentions never shuffle for linking. Both CC paths
+    # return a materialized frame, so the stage adds no checkpoint of its own.
+    canonical_map = stage("canonical_map", lambda: canonical_map_from_alias_dict(alias_dict), 1)
 
     # 4. canonical triples (set semantics); materialized once — extraction
     # and linking feed both the closure stage and the final union
@@ -124,7 +92,7 @@ def run_pipeline(
         # dedup BEFORE the joins: the alias-level distinct is a map-side
         # partial aggregate that shrinks O(turns) rows to O(|alias triples|),
         # so the canonical joins and final dedup touch only dimension-sized data
-        if checkpoint_store is None and extractor == "features":
+        if checkpoint_store is None:
             # project early THROUGH the opaque extractor (r7): this stage
             # consumes only the three alias columns, but mapInArrow defeats
             # column pruning — selecting them from the full feature
@@ -135,9 +103,7 @@ def run_pipeline(
             # lazily-computed full feature table for consumers that ask.
             # With a checkpoint_store, triples_raw is already materialized —
             # reading the snapshot beats re-extracting.
-            from nemo_spark.kg.extract import extract_alias_triples_arrow
-
-            # no alias-level dropDuplicates here: the extractor already
+            # No alias-level dropDuplicates here: the extractor already
             # returns per-batch-distinct rows (bounded at O(distinct per
             # batch)), the canonical mapping is a broadcast join (no
             # shuffle), and the post-join dropDuplicates below is the one

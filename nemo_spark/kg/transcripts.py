@@ -20,7 +20,7 @@ Two generators produce the SAME logical content:
 Entity universe: 50 entities ``ent<k>``; aliases per k: ``entity_<k>``,
 ``ent-<k>``, ``E.<k>``. Alias ``E.<k>`` for k % 10 == 0 ALSO denotes entity
 k+1 (ambiguous alias), which merges entity clusters — this is what makes
-hash-min canonicalization non-trivial.
+min-label canonicalization non-trivial.
 """
 
 from __future__ import annotations

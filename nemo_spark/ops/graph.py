@@ -24,6 +24,8 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nemo_spark.session import local_rows, single_slice_frame
+
 log = logging.getLogger("nemo_spark.graph")
 
 
@@ -61,7 +63,8 @@ def transitive_closure(
         # task mapInPandas), each re-deriving the edge frame. Same
         # size-gated local pattern as the engine's <=100k local fixpoint.
         rows = edges.select(F.col(src), F.col(dst)).limit(small_graph_threshold + 1).collect()
-        if len(rows) <= small_graph_threshold:
+        rows = local_rows(rows) if len(rows) <= small_graph_threshold else None
+        if rows is not None:
             local = _local_tc(edges.sparkSession, rows, edges.schema[src].dataType, src, dst)
             if local is not None:
                 return local
@@ -140,11 +143,6 @@ def _local_tc(spark, rows, dt, src: str, dst: str) -> DataFrame | None:
     shared key is non-null — (NULL,y)∘(y,z) = (NULL,z), (w,x)∘(x,NULL) =
     (w,NULL), and (NULL,y)…(x,NULL) = (NULL,NULL) — but a path never
     continues THROUGH a NULL (the join key never matches)."""
-    if any(isinstance(v, float) and v != v for r in rows for v in (r[0], r[1])):
-        # NaN node ids: Python's nan != nan breaks dict/set composition and
-        # diverges from SQL's NaN = NaN join equality — let the distributed
-        # path compare in SQL
-        return None
     adj: dict = {}
     s_null: set = set()  # y of (NULL, y) edges
     d_null: set = set()  # x of (x, NULL) edges
@@ -192,8 +190,6 @@ def _local_tc(spark, rows, dt, src: str, dst: str) -> DataFrame | None:
     if both_null or (s_targets & d_null):
         nulls.add((None, None))
     from pyspark.sql.types import StructField, StructType
-
-    from nemo_spark.session import single_slice_frame
 
     schema = StructType([StructField(src, dt), StructField(dst, dt)])
     return single_slice_frame(spark, data + list(nulls), schema)

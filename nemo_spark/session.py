@@ -11,8 +11,9 @@ Scale rationale (100 TB / 1000-executor design, tested on local[N]):
 from __future__ import annotations
 
 import os
+from collections.abc import Hashable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Row, SparkSession
 
 
 def get_spark(
@@ -93,18 +94,53 @@ def fan_out(df, min_parallelism: int | None = None):
 
 
 def single_slice_frame(spark, rows, schema):
-    """Driver-held rows as a ONE-slice frame, tagged ``_nemo_local``.
+    """Driver-held rows as a ONE-slice frame.
 
     PySpark's createDataFrame always routes local data through
     ``parallelize`` (there is no true Catalyst LocalRelation from Python),
     so the cheapest downstream shape is a single pickled slice: one task
     per job and no per-slice driver round-trips (the default
     defaultParallelism slices cost ~150 ms EACH to fetch when coalesced).
-    The ``_nemo_local`` tag tells pipeline-stage materialization that a
-    localCheckpoint would only re-ship data the driver already holds."""
-    out = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-    out._nemo_local = True
+
+    ``schema`` is a StructType or DDL string. A list of column names
+    instead infers the types from EVERY row, as ``createDataFrame`` does
+    for a local list (from an RDD it would look at the first row only)."""
+    if isinstance(schema, list):
+        schema = spark._inferSchemaFromList(rows, names=schema)
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+
+
+def local_rows(rows) -> list[tuple] | None:
+    """Collected rows as plain tuples for a driver-local path, or ``None``
+    when that path could disagree with Spark on them.
+
+    This is the one eligibility rule of every size-gated driver-local path
+    (small-graph connected components and transitive closure, the rule
+    engine's local stratum). Struct cells (``Row``) become tuples. ``None``
+    comes back when any cell, or any field of a struct cell, is NaN or
+    unhashable (an array's list, a map's dict, a bytearray): Python's
+    ``nan != nan`` breaks dict and set lookups where SQL joins NaN to NaN,
+    and unhashable values cannot key a dict at all. The caller then takes
+    its distributed path.
+
+    NULL cells pass through, because the callers' semantics really differ:
+    connected components and transitive closure carry a NULL endpoint the
+    way SQL joins do (it joins nothing), while the rule engine keeps any
+    stratum with a NULL cell distributed."""
+    out = []
+    for r in rows:
+        if not all(map(_local_ok, r)):
+            return None
+        out.append(tuple(tuple(c) if isinstance(c, Row) else c for c in r))
     return out
+
+
+def _local_ok(v) -> bool:
+    if isinstance(v, float):
+        return v == v  # NaN
+    if isinstance(v, tuple):  # struct cell
+        return all(map(_local_ok, v))
+    return isinstance(v, Hashable)
 
 
 def _parallelism_of(master: str) -> int:

@@ -3,7 +3,7 @@
 Ground truth is computed in pure Python from the deterministic generator
 arithmetic (tests/ = the 'reference engine' role; the corpus plants known
 triples), covering: per-turn text invariant, extraction parity (pandas UDF vs
-Catalyst expr), canonicalization (hash-min CC vs union-find), final triple
+Catalyst expr), canonicalization (star CC vs union-find), final triple
 set, fixpoint closure (vs Python transitive closure), and mid-run resume.
 """
 
@@ -162,19 +162,19 @@ def test_pipeline_resume(spark, tmp_path):
     assert {r.name for r in lin.select("name").distinct().collect()} >= {"triples_raw", "canonical_map", "triples"}
 
 
-def test_star_cc_matches_hashmin_on_long_chain(spark):
-    """large-star/small-star CC: O(log n) rounds on a high-diameter graph,
-    same output as hash-min. A 2000-node chain would need ~2000 hash-min
-    rounds; star converges in a handful."""
-    import logging
+def test_star_cc_matches_union_find_on_long_chain(spark):
+    """large-star/small-star CC: O(log n) rounds on a high-diameter graph
+    (a 2000-node chain would need ~2000 min-label propagation rounds), and
+    the same output as the driver-local union-find."""
     from nemo_spark.kg.canonicalize import connected_components
 
     n = 2000
     rows = [(i, i + 1) for i in range(n - 1)] + [(5000 + i, 6000 + i) for i in range(5)]
     edges = spark.createDataFrame(rows, "src long, dst long")
-    out = connected_components(edges, method="star", max_rounds=25)
-    got = {(r.node, r.component) for r in out.collect()}
+    star = connected_components(edges, small_graph_threshold=0, max_rounds=25)
+    local = connected_components(edges)
     want = {(i, 0) for i in range(n)} | {(5000 + i, 5000 + i) for i in range(5)} | {
         (6000 + i, 5000 + i) for i in range(5)
     }
-    assert got == want
+    assert {(r.node, r.component) for r in star.collect()} == want
+    assert {(r.node, r.component) for r in local.collect()} == want

@@ -658,6 +658,41 @@ def test_tc_null_endpoints_both_paths_agree(spark):
     small = {(r.src, r.dst) for r in transitive_closure(edges).collect()}
     dist = {(r.src, r.dst) for r in transitive_closure(edges, small_graph_threshold=0).collect()}
     assert small == want and dist == want
+    # array node ids are unhashable driver-side: the small-graph gate must
+    # hand them to the distributed path instead of crashing
+    arrays = spark.createDataFrame(
+        [([1], [2]), ([2], [3]), ([3], None)], "src array<int>, dst array<int>"
+    )
+    want = {((1,), (2,)), ((2,), (3,)), ((1,), (3,)), ((3,), None), ((2,), None), ((1,), None)}
+    for threshold in (10_000, 0):
+        got = {
+            (tuple(r.src), r.dst and tuple(r.dst))
+            for r in transitive_closure(arrays, small_graph_threshold=threshold).collect()
+        }
+        assert got == want, threshold
+
+
+def test_tc_pair_budget_falls_back_to_distributed(spark, monkeypatch):
+    """A chain below the edge threshold whose closure exceeds the local
+    pair budget: the driver-local BFS gives up and the distributed path
+    answers, with the same pairs as a forced-distributed run."""
+    from nemo_spark.ops import graph
+
+    monkeypatch.setattr(graph, "_LOCAL_TC_MAX_PAIRS", 10)
+    local_results = []
+    local_tc = graph._local_tc
+
+    def spy(*args):
+        local_results.append(local_tc(*args))
+        return local_results[-1]
+
+    monkeypatch.setattr(graph, "_local_tc", spy)
+    n = 12  # 12 edges close to 78 pairs, over the budget of 10
+    edges = spark.createDataFrame([(i, i + 1) for i in range(n)], "src long, dst long")
+    gated = {(r.src, r.dst) for r in transitive_closure(edges).collect()}
+    assert local_results == [None]  # the budget was hit, not the edge threshold
+    dist = {(r.src, r.dst) for r in transitive_closure(edges, small_graph_threshold=0).collect()}
+    assert gated == dist == {(i, j) for i in range(n) for j in range(i + 1, n + 1)}
 
 
 def test_tc_cc_keyword_column_names(spark):
@@ -687,6 +722,57 @@ def test_cc_null_endpoints_normalized(spark):
             for r in connected_components(edges, small_graph_threshold=threshold).collect()
         }
         assert got == {(1, 1), (2, 1), (3, 3)}, threshold
+    # array node ids are unhashable driver-side: the small-graph gate must
+    # hand them to the distributed path instead of crashing
+    arrays = spark.createDataFrame(
+        [([1], [2]), ([3], [2]), ([4], None)], "src array<int>, dst array<int>"
+    )
+    for threshold in (100_000, 0):
+        got = {
+            (tuple(r.node), tuple(r.component))
+            for r in connected_components(arrays, small_graph_threshold=threshold).collect()
+        }
+        assert got == {((1,), (1,)), ((2,), (1,)), ((3,), (1,)), ((4,), (4,))}, threshold
+
+
+_NAN = float("nan")
+
+
+@pytest.mark.parametrize(
+    "rows, ddl, want",
+    [
+        (
+            [(_NAN, 1.0), (1.0, _NAN), (_NAN, _NAN)],
+            "a double, b double",
+            [(_NAN, 1.0), (1.0, _NAN), (_NAN, _NAN), (1.0, 1.0)],
+        ),
+        ([([1], [2]), ([2], [3])], "a array<int>, b array<int>", [([1], [2]), ([2], [3]), ([1], [3])]),
+    ],
+    ids=["nan", "array"],
+)
+def test_local_fixpoint_nan_and_array_cells_stay_distributed(spark, rows, ddl, want):
+    """NaN and array cells: SQL joins NaN to NaN where Python's nan != nan
+    breaks set and dict lookups, and arrays cannot key a dict at all — the
+    engine's local stratum must hand both to the distributed path, so both
+    table sizes give the same closure."""
+    from nemo_spark.engine.seminaive import SemiNaiveEngine
+    from nemo_spark.model.rules import Atom, Program, Rule, Var
+
+    X, Y, Z = Var("x"), Var("y"), Var("z")
+    prog = Program(
+        rules=[
+            Rule(head=Atom("reach", X, Y), body=[Atom("edge", X, Y)]),
+            Rule(head=Atom("reach", X, Z), body=[Atom("reach", X, Y), Atom("edge", Y, Z)]),
+        ]
+    )
+
+    def run(threshold):
+        eng = SemiNaiveEngine(spark, local_stratum_threshold=threshold)
+        eng.register("edge", spark.createDataFrame(rows, ddl))
+        eng.run(prog)
+        return sorted(repr((r.c0, r.c1)) for r in eng.table("reach").collect())
+
+    assert run(0) == run(1_000_000) == sorted(map(repr, want))
 
 
 def test_tokens_whitespace_runs(spark):
@@ -882,18 +968,14 @@ def test_langid_preserves_existing_count_columns(spark):
 
 
 def test_cc_unconverged_raises_loudly(spark):
-    # hash-min on a diameter-5 chain with max_rounds=2: returning
-    # still-changing labels would be silent corruption — must raise
+    # star CC on a 7-node chain with max_rounds=2: returning a not-yet-star
+    # edge set would be silent corruption (nodes of one component would
+    # carry different labels) — must raise
     from nemo_spark.kg.canonicalize import connected_components
 
     chain = spark.createDataFrame([(i, i + 1) for i in range(6)], "src long, dst long")
     with pytest.raises(ValueError, match="did not converge"):
-        connected_components(
-            chain, method="hashmin", small_graph_threshold=0, max_rounds=2
-        ).collect()
-    # a typo'd method fails up front, even on small-graph inputs
-    with pytest.raises(ValueError, match="unknown cc method"):
-        connected_components(chain, method="hash-min")
+        connected_components(chain, small_graph_threshold=0, max_rounds=2).collect()
 
 
 def test_broadcast_cache_hits_on_value_equal_string_ids(spark):
@@ -912,11 +994,3 @@ def test_broadcast_cache_hits_on_value_equal_string_ids(spark):
     c = _broadcast_cached(spark, np.asarray(["f1", "f2"], dtype=object), vecs)
     assert c is not a  # different ids, same vectors -> distinct broadcast
     _BC_CACHE.clear()
-
-
-def test_pipeline_unknown_extractor_raises(spark):
-    from nemo_spark.kg.pipeline import run_pipeline
-    from nemo_spark.kg.transcripts import synth_transcripts
-
-    with pytest.raises(ValueError, match="unknown extractor"):
-        run_pipeline(spark, synth_transcripts(spark, 100), extractor="features-pandas")
