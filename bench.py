@@ -131,7 +131,7 @@ def _steal_ticks() -> int:
 
 def scaling_leg(cores: int, corpus_dir: str, n_turns: int, trials: int | None = None) -> dict:
     """One measurement: read the materialized transcript table, run the full
-    pipeline (production feature extractor). Runs in its own process so each
+    pipeline (production triples extractor). Runs in its own process so each
     leg gets a fresh JVM. The host is shared (nonzero hypervisor steal time),
     so each timed section is sampled ``trials`` times and the fastest trial
     is kept, with the steal fraction recorded for transparency."""
@@ -173,12 +173,12 @@ def scaling_leg(cores: int, corpus_dir: str, n_turns: int, trials: int | None = 
             best = kg
     # extraction-stage-only measurement (the compute-dominant stage) —
     # the PRODUCTION extractor (Arrow/RE2), same one the pipeline runs
-    from nemo_spark.kg.extract import extract_turn_features_arrow
+    from nemo_spark.kg.extract import extract_alias_triples_arrow
 
     ew = None
     for _ in range(trials):
         t0 = time.time()
-        extract_turn_features_arrow(tr).count()
+        extract_alias_triples_arrow(tr).count()
         ew = min(ew or 1e9, time.time() - t0)
     best["extract_wall"] = ew
     best["extract_turns_per_sec"] = n_turns / ew

@@ -79,12 +79,12 @@ def main() -> None:
             res = run_pipeline(spark, tr)
             nt = materialized_triples(res).count()
             full = time.time() - t0
-            # isolate: extractor only (noop over the raw features)
+            # isolate: extractor only (noop over its per-batch-distinct triples)
             t0 = time.time()
             sc.setJobDescription("kg: extract only (noop)")
-            from nemo_spark.kg.extract import extract_turn_features_arrow
+            from nemo_spark.kg.extract import extract_alias_triples_arrow
 
-            noop(extract_turn_features_arrow(tr))
+            noop(extract_alias_triples_arrow(tr))
             ext = time.time() - t0
             # isolate: synth + alias-distinct only (the triples reduction input)
             t0 = time.time()

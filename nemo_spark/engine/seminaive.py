@@ -17,7 +17,7 @@ Key mapping decisions:
 - Set semantics / dedup vs history = ``dropDuplicates`` + ``left_anti`` join
   against the accumulated table — THE hot operator of semi-naive.
 - Plan-lineage control: iterative jobs grow logical plans without bound;
-  ``localCheckpoint`` every ``checkpoint_every`` rounds is the analogue of
+  ``localCheckpoint`` every :data:`_CHECKPOINT_EVERY` rounds is the analogue of
   nemo's subtable defragmentation (``execution_engine.rs:263-292``). With a
   ``CheckpointStore`` the engine instead persists parquet/Iceberg snapshots,
   making runs resumable mid-fixpoint.
@@ -48,6 +48,9 @@ from nemo_spark.session import local_rows, single_slice_frame
 log = logging.getLogger("nemo_spark.engine")
 
 _AGG_FN = {"min": F.min, "max": F.max, "sum": F.sum, "count": F.count}
+
+# rounds between lineage-truncating checkpoints of the IDB tables
+_CHECKPOINT_EVERY = 6
 
 
 _CP_KEY = "spark.sql.constraintPropagation.enabled"
@@ -129,7 +132,6 @@ class SemiNaiveEngine:
         self,
         spark: SparkSession,
         broadcast_threshold: int = 2_000_000,
-        checkpoint_every: int = 6,
         checkpoint_store: Any | None = None,
         max_rounds: int = 10_000,
         trace: bool = False,
@@ -138,11 +140,9 @@ class SemiNaiveEngine:
         bucket_history_threshold: int = 1_000_000,  # rows before a predicate's history migrates to the bucketed layout (0 = from the first merge)
         local_stratum_threshold: int = 100_000,  # size-adaptive local fixpoint (0 = always distributed)
         semi_join_reduction: int = 2_000_000,  # rows before a body atom gets semi-join-reduced (0 = never)
-        semi_join_reduction_shuffle: bool = False,  # allow non-broadcast (shuffled) reducers
     ) -> None:
         self.spark = spark
         self.broadcast_threshold = broadcast_threshold
-        self.checkpoint_every = checkpoint_every
         self.checkpoint_store = checkpoint_store
         self.max_rounds = max_rounds
         self.trace = trace
@@ -186,19 +186,15 @@ class SemiNaiveEngine:
         # intermediates larger than the output; the reducer bounds each
         # input by the other relations' key sets before any shuffle join.
         self.semi_join_reduction = semi_join_reduction
-        # semi_join_reduction_shuffle: by default only broadcastable atoms
-        # serve as reducers (the semi-join is then shuffle-free on the big
-        # side) — EXCEPT for the all-big cyclic case (triangles over huge
-        # relations, the query class the reference's WCOJ exists for,
-        # nemo-physical/src/tabular/operations/join.rs:196), where shuffled
-        # left-semi reducers AUTO-ENGAGE: a body with >= 2 atoms above the
-        # broadcast threshold whose hypergraph is cyclic (GYO-irreducible)
-        # would otherwise build binary-join intermediates larger than the
-        # output. Each shuffled semi-join costs one exchange of the reduced
-        # atom but caps the join intermediate at the (much smaller) reduced
-        # size. Setting the flag True forces shuffled reducers for EVERY
-        # reduced body, cyclic or not.
-        self.semi_join_reduction_shuffle = semi_join_reduction_shuffle
+        # Only broadcastable atoms serve as reducers (the semi-join is then
+        # shuffle-free on the big side) — EXCEPT for the all-big cyclic case
+        # (triangles over huge relations, the query class the reference's
+        # WCOJ exists for), where shuffled left-semi reducers AUTO-ENGAGE: a
+        # body with >= 2 atoms above the broadcast threshold whose hypergraph
+        # is cyclic (GYO-irreducible) would otherwise build binary-join
+        # intermediates larger than the output. Each shuffled semi-join costs
+        # one exchange of the reduced atom but caps the join intermediate at
+        # the (much smaller) reduced size.
         if chase not in ("restricted", "skolem"):
             raise ValueError(f"unknown chase variant: {chase}")
         self.chase = chase
@@ -790,7 +786,7 @@ class SemiNaiveEngine:
             # Bucketed-history predicates are skipped: their handle is already
             # a trivial managed-table scan with no lineage growth, and eagerly
             # materializing the accumulated history would defeat the bucketing
-            if round_idx % self.checkpoint_every == 0:
+            if round_idx % _CHECKPOINT_EVERY == 0:
                 for p in idb:
                     if p in self._tables and p not in self._history_tables:
                         self._tables[p] = self._checkpoint(p, self._tables[p], round_idx)
@@ -941,10 +937,10 @@ class SemiNaiveEngine:
             if a.pred not in self._deferred or a.pred in self._tables
         ]
         order = eager + [i for i in range(len(rule.body)) if i not in set(eager)]
-        # shuffled reducers: forced by the flag, or auto-engaged for the
-        # all-big cyclic body (see __init__) — the decision is per rule
-        # application so it tracks the tables' current sizes
-        reduce_shuffle = self.semi_join_reduction_shuffle or (
+        # shuffled reducers: auto-engaged for the all-big cyclic body (see
+        # __init__) — the decision is per rule application so it tracks the
+        # tables' current sizes
+        reduce_shuffle = (
             bool(self.semi_join_reduction)
             and len(rule.body) >= 3
             and sum(

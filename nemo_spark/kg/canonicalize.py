@@ -211,7 +211,7 @@ def _local_cc(spark, rows, dt) -> DataFrame:
             continue
         ra, rb = find(a), find(b)
         if ra != rb:
-            if rb < ra:
+            if _spark_order(rb) < _spark_order(ra):
                 ra, rb = rb, ra
             parent[rb] = ra
     from pyspark.sql.types import StructField, StructType
@@ -221,7 +221,16 @@ def _local_cc(spark, rows, dt) -> DataFrame:
     return single_slice_frame(spark, [(n, find(n)) for n in nodes], schema)
 
 
-def canonical_map_from_alias_dict(alias_dict: DataFrame, small_graph_threshold: int = 100_000) -> DataFrame:
+def _spark_order(v):
+    """Sort key that orders node ids as Spark's ``min``/``least`` do: a
+    struct (tuple) compares field by field with NULL first, recursively;
+    Python alone cannot order ``None`` against a value."""
+    if isinstance(v, tuple):
+        return tuple((0,) if x is None else (1, _spark_order(x)) for x in v)
+    return v
+
+
+def canonical_map_from_alias_dict(alias_dict: DataFrame) -> DataFrame:
     """CC over the bipartite (alias, entity_id) graph; returns
     (node, canonical_id) for both alias and entity nodes. Node ids are
     namespaced ('a:' / 'e:') so aliases and entities cannot collide.
@@ -232,5 +241,5 @@ def canonical_map_from_alias_dict(alias_dict: DataFrame, small_graph_threshold: 
         F.concat(F.lit("a:"), F.col("alias")).alias("src"),
         F.concat(F.lit("e:"), F.col("entity_id")).alias("dst"),
     )
-    cc = connected_components(edges, small_graph_threshold=small_graph_threshold)
+    cc = connected_components(edges)
     return cc.select(F.col("node"), F.col("component").alias("canonical_id"))

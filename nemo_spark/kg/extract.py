@@ -4,21 +4,13 @@ nemo analogy: this is our EDB "import" stage — raw text becomes ternary
 (subj, pred, obj) facts, like nemo's DSV/RDF readers turn files into
 predicates (``nemo/src/io/formats/``). Implementations:
 
-- :func:`extract_triples_expr` — pure Catalyst (regexp), whole-stage codegen,
-  zero Python. FIRST sentence-anchored match per turn only (``TRIPLE_RE``
-  is ^-anchored) — identical to the pandas path on the synthetic corpus
-  (one leading relation per turn) but NOT on free text with mid-turn or
-  multiple relations.
+- :func:`extract_alias_triples_arrow` — the pipeline's extractor: one
+  Arrow/RE2 (``mapInArrow``) pass over ``text`` that returns the distinct
+  (subj_alias, pred, obj_alias) set of each batch.
 - :func:`extract_triples_pandas` — vectorized Arrow-batched ``mapInPandas``
   (the general path for arbitrary mention detectors; NO per-row Python —
   regex is applied per Arrow batch via pandas ``str.extractall``): EVERY
-  occurrence in the turn, anywhere in the text.
-- :func:`extract_turn_features_arrow` — the pipeline's extractor: one
-  Arrow/RE2 pass per turn for the first triple plus quality, language-ID
-  and fingerprint features; :func:`extract_turn_features_pandas` is its
-  pandas twin, kept as the A/B reference.
-- :func:`extract_alias_triples_arrow` — triples only, distinct per batch,
-  for the pipeline's canonical-triples stage.
+  occurrence in the turn, anywhere in the text, keyed by (conv_id, turn_idx).
 - :func:`extract_mentions_pandas` — mention spans with character offsets.
 
 Scale notes: extraction is embarrassingly parallel per turn. We repartition by
@@ -36,7 +28,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nemo_spark.kg.transcripts import TRIPLE_RE
+# re-exported: kg.oracles and the driver entry import the anchored
+# relation regex from here
+from nemo_spark.kg.transcripts import TRIPLE_RE  # noqa: F401
 
 # the relation grammar, defined ONCE — every regex below derives from these
 # two pieces so adding a predicate or alias prefix updates all extractors
@@ -54,19 +48,6 @@ NAMED_MENTION_RE = (
 TRIPLES_RAW_SCHEMA = (
     "conv_id string, turn_idx int, subj_alias string, pred string, obj_alias string"
 )
-
-
-def extract_triples_expr(transcripts: DataFrame) -> DataFrame:
-    """(conv_id, turn_idx, subj_alias, pred, obj_alias) via Catalyst regexp."""
-    t = F.col("text")
-    out = transcripts.select(
-        "conv_id",
-        "turn_idx",
-        F.regexp_extract(t, TRIPLE_RE, 1).alias("subj_alias"),
-        F.regexp_extract(t, TRIPLE_RE, 2).alias("pred"),
-        F.regexp_extract(t, TRIPLE_RE, 3).alias("obj_alias"),
-    )
-    return out.filter(F.col("subj_alias") != "")
 
 
 def extract_triples_pandas(
@@ -99,184 +80,25 @@ def extract_triples_pandas(
     return cols.mapInPandas(extract, schema=TRIPLES_RAW_SCHEMA)
 
 
-TURN_FEATURES_SCHEMA = (
-    "conv_id string, turn_idx int, subj_alias string, pred string, obj_alias string, "
-    "n_tokens int, n_mentions int, n_stopwords int, quality double, "
-    "lang string, fp long"
-)
-
-def _with_fp(transcripts: DataFrame) -> DataFrame:
-    """(conv_id, turn_idx, text, fp): the turn-content fingerprint computed
-    BEFORE the Arrow boundary. xxhash64 runs inside whole-stage codegen (JVM,
-    GB/s per core) and the 8-byte result rides the batch through Python
-    untouched; hashing inside the Python stage (the pre-r6
-    ``pd.util.hash_array`` path) had to materialize every text as a PyObject
-    — the stage's biggest memory-bus segment, and the bus is exactly what
-    caps single-box core scaling. null text = empty turn, so fp(null) ==
-    fp("") per the shared extractor contract."""
-    return transcripts.select(
-        "conv_id",
-        "turn_idx",
-        "text",
-        F.xxhash64(F.coalesce(F.col("text"), F.lit(""))).alias("fp"),
-    )
-
-_STOPWORD_RE = re.compile(r"\b(?:the|a|of|and|to|in|is|it|for|on)\b")
-_MENTION_ONLY_RE = re.compile(r"(?:entity_|ent-|E\.)\d+")
-# tiny language-ID: per-language function-word densities (heuristic n-gram
-# langid, the classic training-pipeline pre-filter)
-_LANG_RES = {
-    "en": re.compile(r"\b(?:the|and|of|to|is|that|with)\b"),
-    "es": re.compile(r"\b(?:el|la|de|que|y|los|por)\b"),
-    "de": re.compile(r"\b(?:der|die|und|das|ist|nicht|mit)\b"),
-    "fr": re.compile(r"\b(?:le|la|et|les|des|est|pour)\b"),
-}
-
-
-def extract_turn_features_pandas(transcripts: DataFrame) -> DataFrame:
-    """One-pass per-turn extraction: relation triple + mention count + token /
-    stopword counts + quality ratio + language-ID + content fingerprint.
-
-    The pandas twin of :func:`extract_turn_features_arrow` (the pipeline's
-    production extractor). At 100 TB you only get to
-    stream the text once, so relation extraction, mention detection, quality
-    scoring, language-ID and the dedup fingerprint share a single Arrow pass
-    (per-batch vectorized pandas). The stage is compute-heavy per byte, so it
-    scales with cores instead of saturating memory bandwidth — this is the
-    stage where real pipelines spend their CPU (NER, tokenizers), and its
-    outputs feed the downstream dedup / quality-filter / linking operators."""
-    triple_pat = re.compile(MENTION_RE)
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            # null text = empty turn, EXPLICITLY (both feature extractors
-            # share this contract): no triple, zero counts, lang 'unk',
-            # fp = hash("") — NaN propagation would otherwise leak nulls
-            # into int columns and diverge between the two implementations
-            t = pdf["text"].fillna("")
-            hits = t.str.extract(triple_pat)
-            hits.columns = ["subj_alias", "pred", "obj_alias"]
-            out = pd.concat([pdf[["conv_id", "turn_idx"]], hits], axis=1)
-            n_tokens = t.str.count(" ").add(1)
-            n_stop = t.str.count(_STOPWORD_RE)
-            out["n_tokens"] = n_tokens
-            out["n_mentions"] = t.str.count(_MENTION_ONLY_RE)
-            out["n_stopwords"] = n_stop
-            out["quality"] = (n_stop / n_tokens).clip(0.0, 1.0)
-            scores = np.stack([t.str.count(rx).to_numpy() for rx in _LANG_RES.values()])
-            langs = np.asarray(list(_LANG_RES))
-            best = scores.argmax(axis=0)
-            out["lang"] = np.where(scores.max(axis=0) > 0, langs[best], "unk")
-            # 64-bit content fingerprint for turn-level exact dedup —
-            # computed JVM-side (xxhash64 in whole-stage codegen) and
-            # forwarded: hashing inside Python materialized every text as a
-            # PyObject, the single biggest memory-bus segment of the stage
-            out["fp"] = pdf["fp"]
-            # EVERY turn keeps its feature row — turns without a relation
-            # sentence carry null triple columns. Dropping them here would
-            # silently lose the quality/langid/dedup-fingerprint features of
-            # all non-relation turns on real corpora (the triples consumer
-            # filters subj_alias itself; the synthetic corpus plants a
-            # relation per turn, which is how this masked as harmless)
-            yield out
-
-    return _with_fp(transcripts).mapInPandas(extract, schema=TURN_FEATURES_SCHEMA)
-
-
-def extract_turn_features_arrow(transcripts: DataFrame) -> DataFrame:
-    """Arrow-native one-pass feature extractor — same columns and VALUES as
-    :func:`extract_turn_features_pandas` (A/B-verified ``exceptAll`` empty
-    both ways on the synthetic corpus), ~2x faster at 2M turns (measured
-    0.94 s vs 1.94 s per pass at local[32]).
-
-    Why: the pandas path runs seven Python-regex passes over object-dtype
-    strings (pandas ``.str`` ops loop per row under the hood). Here every
-    regex executes in RE2 through ``pyarrow.compute`` C++ kernels
-    (``extract_regex`` / ``count_substring_regex``) with no per-row Python
-    and no GIL contention — the patterns use only RE2-safe constructs
-    (alternation, ``\\d``, ``\\b``). The content fingerprint is computed
-    JVM-side and forwarded (:func:`_with_fp`) so both extractors stay
-    drop-in interchangeable with zero Python-object materialization."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    named_re = NAMED_MENTION_RE
-    stop_re = _STOPWORD_RE.pattern
-    mention_re = _MENTION_ONLY_RE.pattern
-    langs = [(name, rx.pattern) for name, rx in _LANG_RES.items()]
-
-    def extract(batches):
-        for batch in batches:
-            # null text = empty turn (same contract as the pandas variant);
-            # without the fill, null propagates through the count kernels
-            # and the lang tie-break chain emits null instead of 'unk'
-            t = pc.fill_null(batch.column("text"), "")
-            hits = pc.extract_regex(t, pattern=named_re)
-            valid = hits.is_valid()
-            n_tokens = pc.add(pc.count_substring(t, pattern=" "), 1)
-            n_stop = pc.count_substring_regex(t, pattern=stop_re)
-            n_ment = pc.count_substring_regex(t, pattern=mention_re)
-            quality = pc.min_element_wise(
-                pc.max_element_wise(
-                    pc.divide(pc.cast(n_stop, pa.float64()), pc.cast(n_tokens, pa.float64())),
-                    0.0,
-                ),
-                1.0,
-            )
-            counts = [pc.count_substring_regex(t, pattern=rx) for _, rx in langs]
-            best = counts[0]
-            for c in counts[1:]:
-                best = pc.max_element_wise(best, c)
-            # argmax-first-max tie-break (np.argmax parity): assign in
-            # REVERSE declaration order so earlier languages overwrite ties
-            lang = pa.array(["unk"] * len(t))
-            for (name, _), c in zip(reversed(langs), reversed(counts)):
-                lang = pc.if_else(pc.and_(pc.equal(c, best), pc.greater(best, 0)), name, lang)
-            null_str = pa.scalar(None, pa.string())
-            tbl = pa.table(
-                {
-                    "conv_id": batch.column("conv_id"),
-                    "turn_idx": batch.column("turn_idx"),
-                    "subj_alias": pc.if_else(valid, pc.struct_field(hits, "subj_alias"), null_str),
-                    "pred": pc.if_else(valid, pc.struct_field(hits, "pred"), null_str),
-                    "obj_alias": pc.if_else(valid, pc.struct_field(hits, "obj_alias"), null_str),
-                    "n_tokens": pc.cast(n_tokens, pa.int32()),
-                    "n_mentions": pc.cast(n_ment, pa.int32()),
-                    "n_stopwords": pc.cast(n_stop, pa.int32()),
-                    "quality": quality,
-                    "lang": lang,
-                    "fp": batch.column("fp"),  # JVM xxhash64, see _with_fp
-                }
-            )
-            yield from tbl.to_batches()
-
-    return _with_fp(transcripts).mapInArrow(extract, schema=TURN_FEATURES_SCHEMA)
-
-
 ALIAS_TRIPLES_SCHEMA = "subj_alias string, pred string, obj_alias string"
 
 
 def extract_alias_triples_arrow(transcripts: DataFrame) -> DataFrame:
     """Triples-only extraction with MAP-SIDE DISTINCT — for consumers that
     need only the distinct (subj_alias, pred, obj_alias) set, e.g. the
-    pipeline's canonical-triples stage (which dropDuplicates globally right
-    after).
+    pipeline's canonical-triples stage (which dropDuplicates globally after
+    its canonical joins).
 
-    Identical triple semantics to :func:`extract_turn_features_arrow`'s
-    triple columns (same UNANCHORED ``NAMED_MENTION_RE`` — first match
-    ANYWHERE in the turn, same RE2 engine; the ^-anchored variant would
-    silently drop every mid-text relation sentence), minus the per-turn
-    feature columns and minus the no-match rows (the downstream
-    inner joins drop those anyway). Two scale effects: the Python->JVM
-    return shrinks from O(turns) to O(distinct triples per batch) — the
-    UDF analogue of partial aggregation — and the single-column projection
-    lets Catalyst prune every other transcript column out of the
-    scan/generation (``mapInArrow`` is opaque: selecting three columns from
-    the full feature extractor still computes and ships all eleven)."""
+    Per turn it takes the first match of the UNANCHORED ``NAMED_MENTION_RE``
+    ANYWHERE in the text (RE2 via ``pyarrow.compute.extract_regex``; the
+    ^-anchored variant would silently drop every mid-text relation
+    sentence) and skips turns with no match or NULL text (the downstream
+    inner joins would drop those anyway). Two scale effects: the
+    Python->JVM return shrinks from O(turns) to O(distinct triples per
+    batch) — the UDF analogue of partial aggregation — and the
+    single-column projection lets Catalyst prune every other transcript
+    column out of the scan (``mapInArrow`` is opaque to column pruning, so
+    only what goes in is pruned)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 

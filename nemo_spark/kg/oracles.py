@@ -119,7 +119,7 @@ _TRIPLES_CTES = f"""
 {_CANON_CTES},
 tr AS ({TRANSCRIPTS_SQL}),
 ext AS (
-  -- mirrors the pipeline's feature extractor: FIRST match anywhere
+  -- mirrors the pipeline's extractor: FIRST match anywhere
   SELECT regexp_extract(text, '{MENTION_RE}', 1) AS subj_alias,
          regexp_extract(text, '{MENTION_RE}', 2) AS pred,
          regexp_extract(text, '{MENTION_RE}', 3) AS obj_alias

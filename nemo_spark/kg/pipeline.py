@@ -4,12 +4,13 @@ triples -> fixpoint closure.
 Stages (each checkpointable to a :class:`CheckpointStore` snapshot with
 per-partition lineage + metrics, so runs resume mid-pipeline):
 
-1. extract   — Arrow/RE2 (``mapInArrow``) per-turn feature extraction
-2. link      — broadcast alias-dictionary join (exact) per mention
-3. canonical — connected components over the alias/entity graph
+1. extract   — Arrow/RE2 (``mapInArrow``) alias triples, distinct per
+               batch (``alias_triples``)
+2. canonical — connected components over the alias/entity graph
                (driver-local union-find when small, star CC otherwise)
-4. triples   — canonicalized, set-semantics (subj, pred, obj)
-5. closure   — transitive predicates closed by semi-naive path doubling
+3. triples   — alias triples linked by broadcast joins against the
+               canonical map: canonicalized, set-semantics (subj, pred, obj)
+4. closure   — transitive predicates closed by semi-naive path doubling
                (driver-local BFS when small), see ``ops.graph``
 
 The closure stage IS nemo re-imagined: derived triples are produced by
@@ -29,12 +30,11 @@ from pyspark.sql import functions as F
 from nemo_spark.engine.checkpoint import CheckpointStore
 from nemo_spark.kg import transcripts as T
 from nemo_spark.kg.canonicalize import canonical_map_from_alias_dict
-from nemo_spark.kg.extract import extract_alias_triples_arrow, extract_turn_features_arrow
+from nemo_spark.kg.extract import extract_alias_triples_arrow
 
 
 @dataclass
 class PipelineResult:
-    triples_raw: DataFrame
     canonical_map: DataFrame
     triples: DataFrame
     closure: DataFrame
@@ -71,47 +71,29 @@ def run_pipeline(
 
     alias_dict = alias_dict if alias_dict is not None else T.alias_dict(spark)
 
-    # 1. extract — the one-pass per-turn feature extractor (triples +
-    # mentions + quality + langid + dedup fingerprint) in its Arrow/RE2 form
-    # (~2x the pandas variant, identical output — A/B in
-    # tests/test_ops.py::test_feature_extractors_identical)
-    triples_raw = stage("triples_raw", lambda: extract_turn_features_arrow(transcripts), 1)
+    # 1. extract — the triples-only Arrow/RE2 pass reads just `text` and
+    # returns per-batch-distinct alias triples. Lazy without a store, so the
+    # triples stage below fuses it into its own plan; with a store it is the
+    # first resumable snapshot.
+    alias_triples = stage("alias_triples", lambda: extract_alias_triples_arrow(transcripts), 1)
 
-    # 2+3. canonical map: CC over the (alias, entity) bipartite graph.
+    # 2. canonical map: CC over the (alias, entity) bipartite graph.
     # The alias dictionary is dimension-sized, so the canonical map is small
     # and broadcastable; mentions never shuffle for linking. Both CC paths
     # return a materialized frame, so the stage adds no checkpoint of its own.
     canonical_map = stage("canonical_map", lambda: canonical_map_from_alias_dict(alias_dict), 1)
 
-    # 4. canonical triples (set semantics); materialized once — extraction
+    # 3. canonical triples (set semantics); materialized once — extraction
     # and linking feed both the closure stage and the final union
     def build_triples() -> DataFrame:
         cm = F.broadcast(canonical_map)
         s = cm.withColumnRenamed("node", "__sn").withColumnRenamed("canonical_id", "subj")
         o = cm.withColumnRenamed("node", "__on").withColumnRenamed("canonical_id", "obj")
-        # dedup BEFORE the joins: the alias-level distinct is a map-side
-        # partial aggregate that shrinks O(turns) rows to O(|alias triples|),
-        # so the canonical joins and final dedup touch only dimension-sized data
-        if checkpoint_store is None:
-            # project early THROUGH the opaque extractor (r7): this stage
-            # consumes only the three alias columns, but mapInArrow defeats
-            # column pruning — selecting them from the full feature
-            # extractor still runs all eight RE2 passes and ships eleven
-            # columns per turn across the Arrow boundary. The dedicated
-            # triples-only pass (same regex, same engine) reads just `text`
-            # and returns per-batch-distinct triples; triples_raw stays the
-            # lazily-computed full feature table for consumers that ask.
-            # With a checkpoint_store, triples_raw is already materialized —
-            # reading the snapshot beats re-extracting.
-            # No alias-level dropDuplicates here: the extractor already
-            # returns per-batch-distinct rows (bounded at O(distinct per
-            # batch)), the canonical mapping is a broadcast join (no
-            # shuffle), and the post-join dropDuplicates below is the one
-            # real exchange — a second pre-join distinct would only add a
-            # full shuffle stage for rows the final dedup removes anyway
-            alias_triples = extract_alias_triples_arrow(transcripts)
-        else:
-            alias_triples = triples_raw.select("subj_alias", "pred", "obj_alias").dropDuplicates()
+        # no alias-level dropDuplicates before the joins: the extractor
+        # already returns per-batch-distinct rows, the canonical mapping is a
+        # broadcast join (no shuffle), and the post-join dropDuplicates below
+        # is the one real exchange — a pre-join distinct would only add a
+        # full shuffle stage for rows the final dedup removes anyway
         out = (
             alias_triples
             .join(s, F.concat(F.lit("a:"), F.col("subj_alias")) == F.col("__sn"), "inner")
@@ -123,7 +105,7 @@ def run_pipeline(
 
     triples = stage("triples", build_triples, 1, materialize=True)
 
-    # 5. fixpoint closure of transitive predicates — path-doubling semi-naive
+    # 4. fixpoint closure of transitive predicates — path-doubling semi-naive
     # (O(log diameter) rounds; the generic linear-recursion engine is
     # SemiNaiveEngine, exercised by the Datalog query surface)
     def build_closure() -> DataFrame:
@@ -155,7 +137,7 @@ def run_pipeline(
     closure = stage("closure", build_closure, 1)
 
     metrics["total_wall_sec"] = time.time() - t_start
-    return PipelineResult(triples_raw, canonical_map, triples, closure, metrics)
+    return PipelineResult(canonical_map, triples, closure, metrics)
 
 
 def materialized_triples(result: PipelineResult) -> DataFrame:

@@ -28,14 +28,19 @@ from nemo_spark.session import local_rows, single_slice_frame
 
 log = logging.getLogger("nemo_spark.graph")
 
+# the doubling path broadcasts a round's delta when it has at most this many
+# rows AND an estimated size of at most _BROADCAST_MAX_BYTES
+_BROADCAST_ROWS = 2_000_000
+_BROADCAST_MAX_BYTES = 64 << 20
+# doubling needs O(log diameter) rounds, so 64 covers any real graph; a
+# closure still growing at the cap raises rather than return a subset
+_MAX_ROUNDS = 64
+
 
 def transitive_closure(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    broadcast_threshold: int = 2_000_000,
-    broadcast_max_bytes: int = 64 << 20,
-    max_rounds: int = 64,
     small_graph_threshold: int = 10_000,
 ) -> DataFrame:
     """All (src, dst) pairs reachable via 1+ edges. Columns preserved.
@@ -77,11 +82,11 @@ def transitive_closure(
     delta_cnt = tc.count()
     rounds = 0
     est_row: float | None = None
-    while delta_cnt and rounds < max_rounds:
+    while delta_cnt and rounds < _MAX_ROUNDS:
         rounds += 1
         t0 = time.time()
         d = delta
-        if delta_cnt <= broadcast_threshold:
+        if delta_cnt <= _BROADCAST_ROWS:
             # the row gate alone would let wide string keys (KG IRIs run
             # 100+ bytes) force multi-hundred-MB broadcasts — an explicit
             # F.broadcast bypasses autoBroadcastJoinThreshold entirely, so
@@ -98,7 +103,7 @@ def transitive_closure(
                     if sample
                     else 0.0
                 )
-            if delta_cnt * est_row <= broadcast_max_bytes:
+            if delta_cnt * est_row <= _BROADCAST_MAX_BYTES:
                 d = F.broadcast(delta)
         left = d.alias("l").join(tc.alias("r"), F.col("l.b") == F.col("r.a")).select(
             F.col("l.a").alias("a"), F.col("r.b").alias("b")
@@ -119,6 +124,10 @@ def transitive_closure(
             tc = tc.unionByName(fresh).localCheckpoint(eager=True)
         delta = fresh
         log.debug("tc doubling round %d fresh=%d %.2fs", rounds, delta_cnt, time.time() - t0)
+    if delta_cnt:
+        # pairs still fresh at the cap: tc holds a strict SUBSET of the
+        # closure — fail loudly, as star CC and SemiNaiveEngine do
+        raise RuntimeError(f"transitive_closure did not converge within {_MAX_ROUNDS} doubling rounds")
     return tc.select(F.col("a").alias(src), F.col("b").alias(dst))
 
 

@@ -11,6 +11,7 @@ Scale rationale (100 TB / 1000-executor design, tested on local[N]):
 from __future__ import annotations
 
 import os
+import re
 from collections.abc import Hashable
 
 from pyspark.sql import Row, SparkSession
@@ -65,6 +66,11 @@ def get_spark(
     return b.getOrCreate()
 
 
+# a shuffle's node name in a physical plan string ("Exchange hashpartitioning
+# ..."); the word boundary keeps BroadcastExchange out
+_SHUFFLE_EXCHANGE = re.compile(r"\bExchange\b")
+
+
 def fan_out(df, min_parallelism: int | None = None):
     """Spread a narrow scan across the cores: when the frame's physical
     partitioning is below the session's default parallelism, round-robin
@@ -81,12 +87,14 @@ def fan_out(df, min_parallelism: int | None = None):
     RepartitionOperation; verified in the scan's PushedFilters)."""
     spark = df.sparkSession
     p = min_parallelism or spark.sparkContext.defaultParallelism
-    # only gate NARROW plans (scan/map chains): on a frame with an upstream
-    # exchange, materializing .rdd to read its partition count EXECUTES the
-    # shuffle stages as their own job under AQE (measured: a groupBy
-    # frame's getNumPartitions ran the full stage), and post-shuffle width
-    # is governed by spark.sql.shuffle.partitions / AQE anyway
-    if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
+    # only gate plans without a SHUFFLE exchange: on a frame with an
+    # upstream shuffle, materializing .rdd to read its partition count
+    # EXECUTES the shuffle stages as their own job under AQE (measured: a
+    # groupBy frame's getNumPartitions ran the full stage), and post-shuffle
+    # width is governed by spark.sql.shuffle.partitions / AQE anyway. A
+    # BroadcastExchange does not count: a broadcast join keeps its probe
+    # side's (possibly single) split, which is what needs widening.
+    if _SHUFFLE_EXCHANGE.search(df._jdf.queryExecution().executedPlan().toString()):
         return df
     if df.rdd.getNumPartitions() < p:
         return df.repartition(p)

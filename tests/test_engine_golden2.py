@@ -418,7 +418,7 @@ def test_local_fixpoint_overflow_falls_back_distributed(spark):
     assert eng.table("pairs").count() == 6400
 
 
-def test_semi_join_reduction_shuffled_all_big(spark):
+def test_shuffled_semi_join_reducers_all_big(spark):
     """Shuffled reducers AUTO-ENGAGE (no opt-in flag) for the all-big
     cyclic case — every triangle atom is the same 'large' relation, so no
     broadcastable reducer exists; shuffled left-semi reducers still bound
@@ -440,8 +440,8 @@ def test_semi_join_reduction_shuffled_all_big(spark):
         eng = SemiNaiveEngine(
             spark,
             semi_join_reduction=1 if reduce_ else 0,
-            # note: semi_join_reduction_shuffle stays at its default (False);
-            # the cyclic-body auto-engage is what must allow shuffled reducers
+            # no option forces shuffled reducers: the cyclic-body
+            # auto-engage is what must allow them
             broadcast_threshold=1,  # nothing is broadcastable
             local_stratum_threshold=0,
         )
@@ -458,7 +458,7 @@ def test_semi_join_reduction_shuffled_all_big(spark):
     assert "LeftSemi" in plan, plan
 
 
-def test_semi_join_reduction_shuffle_not_engaged_acyclic(spark):
+def test_shuffled_semi_join_reducers_not_engaged_acyclic(spark):
     """Auto-engaged shuffled reducers are scoped to CYCLIC bodies: an
     acyclic 3-atom chain over all-big atoms must not pay per-atom semi-join
     exchanges (binary joins already stream each side once along a tree)."""

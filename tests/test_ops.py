@@ -433,67 +433,14 @@ def test_mention_spans_match_per_row_search(spark):
     assert got == sorted(want)
 
 
-def test_turn_features_keep_non_relation_turns(spark):
-    """The one-pass feature extractor keeps a row per turn — quality/langid/
-    fingerprint features of turns WITHOUT a relation sentence must survive
-    (they feed dedup and quality filtering); triple columns are null."""
-    from nemo_spark.kg.extract import extract_turn_features_pandas
+def test_alias_triples_extractor_matches_python_reference(spark):
+    """The pipeline's triples-only extractor must yield exactly the distinct
+    set of each turn's FIRST relation sentence anywhere in the text, as
+    Python's ``re.search`` finds it — turns with no match or NULL text
+    contribute nothing."""
+    import re
 
-    tr = spark.createDataFrame(
-        [
-            ("c1", 0, "entity_1 works_at ent-2 . more text"),
-            ("c1", 1, "just chatting about the weather"),
-        ],
-        "conv_id string, turn_idx int, text string",
-    )
-    out = extract_turn_features_pandas(tr).collect()
-    assert len(out) == 2
-    by_idx = {r.turn_idx: r for r in out}
-    assert by_idx[0].subj_alias == "entity_1"
-    assert by_idx[1].subj_alias is None
-    assert by_idx[1].n_tokens == 5 and by_idx[1].fp is not None
-
-
-def test_feature_extractors_identical(spark):
-    """The Arrow/RE2 feature extractor (pipeline default) must be a value
-    drop-in for the pandas one on every column, including edge turns:
-    multilingual text, ties in language scores, relation-free turns, and
-    empty-ish strings."""
-    from nemo_spark.kg.extract import (
-        extract_turn_features_arrow,
-        extract_turn_features_pandas,
-    )
-    from nemo_spark.kg.transcripts import synth_transcripts
-
-    tr = synth_transcripts(spark, 20_000)
-    edge = spark.createDataFrame(
-        [
-            ("e", 0, "entity_1 works_at ent-2 . the el der le"),  # 4-way lang tie
-            ("e", 1, "x"),
-            ("e", 2, "la la la que y"),
-            ("e", 3, "E.9 part_of E.10 . der und das ist"),
-            ("e", 4, None),  # null text = empty turn on BOTH paths
-            ("e", 5, ""),
-        ],
-        "conv_id string, turn_idx int, text string",
-    )
-    for df in (tr, edge):
-        a = extract_turn_features_pandas(df)
-        b = extract_turn_features_arrow(df)
-        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
-
-
-def test_alias_triples_extractor_matches_feature_extractor(spark):
-    """The triples-only map-side-distinct extractor (the pipeline's r7
-    canonical-triples input) must yield exactly the distinct non-null triple
-    set of the full feature extractor — same regex, same engine, minus the
-    per-turn features and the no-match rows the inner joins drop anyway."""
-    from pyspark.sql import functions as F
-
-    from nemo_spark.kg.extract import (
-        extract_alias_triples_arrow,
-        extract_turn_features_arrow,
-    )
+    from nemo_spark.kg.extract import MENTION_RE, extract_alias_triples_arrow
     from nemo_spark.kg.transcripts import synth_transcripts
 
     tr = synth_transcripts(spark, 20_000)
@@ -504,21 +451,22 @@ def test_alias_triples_extractor_matches_feature_extractor(spark):
             ("e", 2, None),
             ("e", 3, ""),
             ("e", 4, "entity_1 works_at ent-2 . filler"),  # duplicate triple
-            # MID-TEXT relation: both extractors search anywhere (unanchored
+            # MID-TEXT relation: the extractor searches anywhere (unanchored
             # NAMED_MENTION_RE); a ^-anchored fast path would drop this row
             ("e", 5, "note: E.7 part_of ent-9 . trailing"),
+            # two relations: only the first counts
+            ("e", 6, "E.1 located_in E.2 . then E.3 part_of E.4 ."),
         ],
         "conv_id string, turn_idx int, text string",
     )
     for df in (tr, edge):
-        a = extract_alias_triples_arrow(df).dropDuplicates()
-        b = (
-            extract_turn_features_arrow(df)
-            .select("subj_alias", "pred", "obj_alias")
-            .where(F.col("subj_alias").isNotNull())
-            .dropDuplicates()
-        )
-        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+        got = extract_alias_triples_arrow(df).collect()
+        want = {
+            m.groups()
+            for (text,) in df.select("text").collect()
+            if (m := re.search(MENTION_RE, text or ""))
+        }
+        assert {tuple(r) for r in got} == want
 
 
 def test_cc_nan_endpoints_use_sql_semantics(spark):
@@ -695,6 +643,18 @@ def test_tc_pair_budget_falls_back_to_distributed(spark, monkeypatch):
     assert gated == dist == {(i, j) for i in range(n) for j in range(i + 1, n + 1)}
 
 
+def test_tc_round_cap_raises_loudly(spark, monkeypatch):
+    """A doubling closure still growing at the round cap holds a strict
+    subset of the pairs: it must raise, not return the partial closure
+    (a 16-edge chain needs 4 doubling rounds, the cap allows 1)."""
+    from nemo_spark.ops import graph
+
+    monkeypatch.setattr(graph, "_MAX_ROUNDS", 1)
+    chain = spark.createDataFrame([(i, i + 1) for i in range(16)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        transitive_closure(chain, small_graph_threshold=0).collect()
+
+
 def test_tc_cc_keyword_column_names(spark):
     """src/dst names that are not Python identifiers ('from' is a keyword —
     itertuples would rename it) work on the single-task paths."""
@@ -710,7 +670,8 @@ def test_tc_cc_keyword_column_names(spark):
 
 def test_cc_null_endpoints_normalized(spark):
     """A half-NULL edge registers its non-null node as isolated; a full-NULL
-    edge drops; no bogus NULL node row on either path."""
+    edge drops; no bogus NULL node row on either path; NULL struct fields
+    order as in Spark."""
     from nemo_spark.kg.canonicalize import connected_components
 
     edges = spark.createDataFrame(
@@ -733,6 +694,26 @@ def test_cc_null_endpoints_normalized(spark):
             for r in connected_components(arrays, small_graph_threshold=threshold).collect()
         }
         assert got == {((1,), (1,)), ((2,), (1,)), ((3,), (1,)), ((4,), (4,))}, threshold
+    # struct ids with a NULL field: Spark orders NULL first inside a struct,
+    # so (1,NULL) is the minimum of its component and (NULL,5) sorts below
+    # (0,0); union-find must order them the same way, not fail to compare
+    # None with an int
+    structs = spark.createDataFrame(
+        [((1, None), (1, 2)), ((1, 2), (3, 4)), ((0, 0), (None, 5))],
+        "src struct<a:int,b:int>, dst struct<a:int,b:int>",
+    )
+    for threshold in (100_000, 0):
+        got = {
+            (tuple(r.node), tuple(r.component))
+            for r in connected_components(structs, small_graph_threshold=threshold).collect()
+        }
+        assert got == {
+            ((1, None), (1, None)),
+            ((1, 2), (1, None)),
+            ((3, 4), (1, None)),
+            ((0, 0), (None, 5)),
+            ((None, 5), (None, 5)),
+        }, threshold
 
 
 _NAN = float("nan")
@@ -994,3 +975,27 @@ def test_broadcast_cache_hits_on_value_equal_string_ids(spark):
     c = _broadcast_cached(spark, np.asarray(["f1", "f2"], dtype=object), vecs)
     assert c is not a  # different ids, same vectors -> distinct broadcast
     _BC_CACHE.clear()
+
+
+def test_fan_out_widens_narrow_scans_only(spark):
+    """fan_out round-robins a single-split narrow plan to the session's
+    default parallelism and leaves a shuffled plan alone. A broadcast join
+    has no shuffle — its probe side is still one split — so it is widened
+    too (a BroadcastExchange is not a shuffle exchange)."""
+    from nemo_spark.session import fan_out
+
+    p = spark.sparkContext.defaultParallelism
+    assert p > 1
+    scan = spark.range(0, 100, 1, numPartitions=1)
+    assert fan_out(scan).rdd.getNumPartitions() == p
+
+    # two splits, below p: a single split would let Spark plan the groupBy
+    # without an exchange
+    two = spark.range(0, 100, 1, numPartitions=2)
+    shuffled = two.groupBy((F.col("id") % 7).alias("k")).count()
+    assert fan_out(shuffled) is shuffled
+
+    small = spark.range(0, 10, 1, numPartitions=1).withColumnRenamed("id", "k")
+    joined = scan.join(F.broadcast(small), scan["id"] == small["k"])
+    assert "BroadcastExchange" in joined._jdf.queryExecution().executedPlan().toString()
+    assert fan_out(joined).rdd.getNumPartitions() == p
